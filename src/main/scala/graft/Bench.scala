@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Headline benchmark main. Prints ONE JSON line (the driver's record) and
   * maintains tools/bench_last.json as the durable full copy.
@@ -33,19 +33,48 @@ import org.apache.spark.sql.SparkSession
   * the JSON as calibration_start/calibration_end.
   */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
+  // watchdog budget per timed pass (hung query → recorded timeout, not a
+  // stalled bench); the slowest declared query runs ~7 s at sf0.1, so
+  // 600 s only ever fires on a genuine hang
+  val timeoutSec: Long =
+    sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_SEC", "600").toLong
+
+  /** One timed pass of a declared query: its count under the [[Watchdog]],
+    * then — outside the timer — the cache manager cleared and a driver GC.
+    * Seconds on success, the recorded failure otherwise. Bench and
+    * `Probe time` both measure through this step.
+    */
+  def timeOnce(spark: SparkSession, name: String, fn: Query,
+      dir: String): Either[String, Double] = {
+    val t0 = System.nanoTime()
+    val r = Watchdog.run(spark, name, timeoutSec) {
+      fn(spark, dir).count()
+    }
+    val t = (System.nanoTime() - t0) / 1e9
+    // queries cache intermediates (encoded bitsets, LSH bands, IVF
+    // assignments); left in place they accumulate across the run and
+    // later queries pay the GC bill — clear outside the timer
+    spark.sharedState.cacheManager.clearCache()
+    // localCheckpoint blocks are NOT covered by clearCache(): they
+    // release only when the ContextCleaner sees their RDDs unreferenced,
+    // which needs a driver GC cycle. The loop queries checkpoint per
+    // round, so without this a pass can leave hundreds of orphaned
+    // blocks on the block manager and LATER passes/queries measure GC
+    // pressure, not their own work (observed as multi-second pass
+    // spreads on checkpoint-heavy queries). Runs OUTSIDE the timer;
+    // timing semantics (min over passes, what a pass executes) are
+    // unchanged.
+    System.gc()
+    r.map(_ => t)
+  }
+
   def main(args: Array[String]): Unit = {
     val wall0 = System.nanoTime()
     def wallSec: Double = (System.nanoTime() - wall0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts NANOS
-      .config("spark.sql.session.timeZone", "UTC") // events.ts NTZ→LTZ cast is exact under UTC
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     // q_stream_* run the micro-batch streaming engine to completion; their
     // wall time is AvailableNow trigger/checkpoint scheduling, not data
     // throughput, so they are correctness-gated (Verify) but not timed.
@@ -81,11 +110,6 @@ object Bench {
     // OOM (ADVICE r8 #2) — the root cause (a testdata schema flip) was only
     // diagnosable by re-running by hand. Keep the LAST message per query.
     val errDetail = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // watchdog budget per timed pass (hung query → recorded timeout, not a
-    // stalled bench); the slowest declared query runs ~7 s at sf0.1, so
-    // 600 s only ever fires on a genuine hang
-    val timeoutSec =
-      sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_SEC", "600").toLong
     // every successful pass time per query — the spread (max−min)/min over
     // ALL reps rides into the JSON next to the min, so a cross-round
     // comparison can tell a noisy reading from a real regression without
@@ -96,41 +120,16 @@ object Bench {
     // one timed execution, NOT recorded in passTimes — the ambient
     // re-probe path uses this so probe reps never pollute a benched
     // query's spread/reps bookkeeping
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Option[String]) = {
-      val t0 = System.nanoTime()
-      val r = Watchdog.run(spark, name, timeoutSec) {
-        fn(spark, sfDir).count()
-      }
-      val t = (System.nanoTime() - t0) / 1e9
-      // queries cache intermediates (encoded bitsets, LSH bands, IVF
-      // assignments); left in place they accumulate across the run and
-      // later queries pay the GC bill — clear outside the timer
-      spark.sharedState.cacheManager.clearCache()
-      // localCheckpoint blocks are NOT covered by clearCache(): they
-      // release only when the ContextCleaner sees their RDDs unreferenced,
-      // which needs a driver GC cycle. The loop queries checkpoint per
-      // round, so without this a pass can leave hundreds of orphaned
-      // blocks on the block manager and LATER passes/queries measure GC
-      // pressure, not their own work (observed as multi-second pass
-      // spreads on checkpoint-heavy queries). Runs OUTSIDE the timer;
-      // timing semantics (min over passes, what a pass executes) are
-      // unchanged.
-      System.gc()
-      r match {
-        case Right(_) => (t, None)
-        case Left(msg) => (-1.0, Some(msg))
-      }
-    }
-    def pass(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val (t, err) = timeOnce(name, fn)
-      err match {
-        case None =>
+    def timeOnce(name: String, fn: Query): Either[String, Double] =
+      Bench.timeOnce(spark, name, fn, sfDir)
+    def pass(name: String, fn: Query): Double =
+      timeOnce(name, fn) match {
+        case Right(t) =>
           passTimes.getOrElseUpdate(name,
             scala.collection.mutable.ListBuffer.empty[Double]) += t
           t
-        case Some(msg) => errDetail(name) = msg; -1.0
+        case Left(msg) => errDetail(name) = msg; -1.0
       }
-    }
 
     // ── start calibration probe: q_scan_parquet is pure I/O+codegen, so
     //    its ratio vs the quiet reference IS the ambient load factor. One
@@ -161,8 +160,8 @@ object Bench {
     var recoveredAt: Option[(String, Double)] = None
     val reprobes = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     def reprobeAmbient(trigger: String): Unit = if (calRef > 0) {
-      val a = timeOnce("q_scan_parquet", calFn)._1
-      val b = timeOnce("q_scan_parquet", calFn)._1
+      val a = timeOnce("q_scan_parquet", calFn).getOrElse(-1.0)
+      val b = timeOnce("q_scan_parquet", calFn).getOrElse(-1.0)
       val c = if (a < 0 || b < 0) math.max(a, b) else math.min(a, b)
       if (c > 0) {
         val amb = c / calRef

@@ -41,11 +41,14 @@ class SnapshotsSpec extends SparkTestBase {
     val dir = tempDir("corrupt")
     val good = """{"city":"Warsaw","id":7,"name":"OK","coordinates":{"latitude":52.0,"longitude":21.0},"datetimeLast":{"utc":"2025-09-07T00:00:00Z"},"sensors":[{"id":1,"parameter":{"name":"pm25","units":"µg/m³"}}]}"""
     val bad = """{"city": NOT JSON AT ALL"""
+    // a good line right after an unterminated object must survive too
+    val after = good.replace("\"id\":7", "\"id\":8")
     Files.write(java.nio.file.Paths.get(dir, "snap.json"),
-      java.util.Arrays.asList(good, bad))
+      java.util.Arrays.asList(good, bad, after))
     val df = Snapshots.readLocations(spark, dir)
-    assert(df.count() == 2)
+    assert(df.count() == 3)
     assert(df.filter(col("id").isNull).count() == 1) // corrupt row → nulls
     assert(df.filter(col("id") === 7).count() == 1)
+    assert(df.filter(col("id") === 8).count() == 1)
   }
 }
